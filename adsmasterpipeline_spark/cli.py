@@ -1,12 +1,23 @@
 """CLI entry points — the run.py-equivalent surface (SURVEY §2.9 O2,
 O7, O8; reference run.py:103-232, :366-424, :499-518).
 
-Each subcommand is one deterministic Spark job over parquet-backed
-tables; the Celery choreography collapses into sequential actions.
+Each subcommand is one deterministic Spark job; the Celery
+choreography collapses into sequential actions. The records table
+under ``--data`` is read and written through ``sinks.lake`` and keeps
+the format it was created with; ``ingest --fmt`` picks the format of a
+new table, elsewhere ``--fmt`` only cross-checks it.
 
-    python -m adsmasterpipeline_spark.cli ingest   --events DIR --data DIR
-    python -m adsmasterpipeline_spark.cli reindex  --data DIR [--force] [--since TS]
-    python -m adsmasterpipeline_spark.cli sitemap  --data DIR --action bootstrap|update|auto
+    python -m adsmasterpipeline_spark.cli ingest   --events DIR --data DIR [--fmt parquet|txn]
+    python -m adsmasterpipeline_spark.cli reindex  --data DIR [--force] [--since TS] [--bibcodes F] [--failed]
+    python -m adsmasterpipeline_spark.cli sitemap  --data DIR --action bootstrap|update|auto|cleanup [--incremental]
+    python -m adsmasterpipeline_spark.cli outbox   --data DIR --kind augment|boost|classify [--incremental]
+    python -m adsmasterpipeline_spark.cli rebuild  --data DIR [--min-docs N]
+    python -m adsmasterpipeline_spark.cli gc       --data DIR --cutoff TS
+    python -m adsmasterpipeline_spark.cli scixid   --data DIR --flag update|force|reset [--bibcodes F]
+    python -m adsmasterpipeline_spark.cli diag     --data DIR
+    python -m adsmasterpipeline_spark.cli delete   --data DIR --bibcodes F
+    python -m adsmasterpipeline_spark.cli corpus   --sf-dir DIR --out DIR
+    python -m adsmasterpipeline_spark.cli lake     ACTION --path DIR
     python -m adsmasterpipeline_spark.cli validate --left DIR --right DIR
 """
 
@@ -25,97 +36,66 @@ def _spark():
     return s
 
 
-def _records_path(data_dir: str) -> str:
-    return os.path.join(data_dir, "records")
+def _records(spark, args, **txn_opts):
+    """The records table under ``--data``, in its on-disk format;
+    ``--fmt`` (where the command has it) names the format of a table
+    that does not exist yet."""
+    from .sinks.lake import open_records
+    return open_records(spark, os.path.join(args.data, "records"),
+                        getattr(args, "fmt", None), **txn_opts)
 
 
-def _load_records(spark, data_dir: str):
-    from .storage import empty_records
-    path = _records_path(data_dir)
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return empty_records(spark)
+def _probe(p: dict | None, touched: bool = True) -> dict | None:
+    """The file-skipping counts of a txn merge or read probe."""
+    if p is None:
+        return None
+    out = {"live_files": p.get("live_files"),
+           "candidate_files": len(p.get("candidate_files", []))}
+    if touched:
+        out["touched_files"] = len(p.get("touched_files", []))
+    return out
 
 
-def _save_records(df, data_dir: str) -> None:
-    import uuid
-
-    from .sinks.lake import publish_snapshot_dir
-    path = _records_path(data_dir)
-    # versioned snapshot dir + atomic symlink swap (sinks/lake.py):
-    # a crash at any point leaves the old or the new COMPLETE
-    # snapshot readable — the round-6 rmtree-then-rename had a window
-    # that left neither
-    staging = f"{path}.v-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    publish_snapshot_dir(path, staging)
-    # The swap happens behind Spark's back: any cached relation over
-    # `path` (cmd_reindex caches records) would keep serving the
-    # PRE-swap rows to every later read in this session. Cross-process
-    # callers never notice; in-process sequences (tests, long-lived
-    # drivers) silently lose the writeback without this.
-    df.sparkSession.catalog.refreshByPath(path)
+def _feed(t, kv, vk: str):
+    """The change-feed window ``(v_lo, v_hi]`` past the KV version
+    watermark ``vk``; refuses a table that keeps no feed."""
+    from .sinks.lake import require_change_feed
+    require_change_feed(t)
+    return int(kv.get(vk) or -1), t.version()
 
 
-def _records_txn(spark, data_dir: str, **opts):
-    from .sinks.txnlake import txn_table
-    return txn_table(spark, _records_path(data_dir), **opts)
+def _feed_probe(t, v_lo: int, v_hi: int) -> dict:
+    p = t.last_changes_probe or {}
+    return {"v_lo": v_lo, "v_hi": v_hi,
+            "files_read": len(p.get("files_read", [])),
+            "live_files": p.get("live_files")}
 
 
 def cmd_ingest(args) -> int:
     """Batch-apply an update-event directory (JSON lines with the
     EVENT_SCHEMA) into the records table; appends the changelog.
 
-    ``--fmt txn`` routes through the log-structured TxnTable exactly
-    like the streaming path: an existing table is merged against ONLY
-    the rows read from stat-pruned candidate files (read_for_keys),
-    insert ids continue from the driver-side stat fold, and the
-    publish is a file-granular MERGE — O(touched files + batch), not
-    O(table) (VERDICT r6 task 4)."""
-    from pyspark.sql import functions as F
-
+    The upsert is ``sinks.lake.apply_events``, the same path the
+    streaming ingest runs: only the rows of the batch's keys are read
+    (on a txn table, from stat-pruned candidate files), insert ids
+    continue from the driver-side stat fold, and the publish is a
+    keyed MERGE — on a txn table O(touched files + batch), not
+    O(table) (VERDICT r6 task 4). ``--fmt`` names the format of a
+    table this run creates."""
     from .schemas import EVENT_SCHEMA
-    from .storage import empty_records, merge_updates
+    from .sinks.lake import apply_events
     spark = _spark()
     events = spark.read.schema(EVENT_SCHEMA).json(args.events)
+    t = _records(spark, args, cluster_writes=True,
+                 rows_per_file=args.rows_per_file)
+    merged, changelog, _ = apply_events(
+        t, events, merge_on_read=args.merge_on_read)
     out: dict = {}
-    if getattr(args, "fmt", "parquet") == "txn":
-        t = _records_txn(spark, args.data, cluster_writes=True,
-                         rows_per_file=args.rows_per_file)
-        event_keys = events.select("bibcode").distinct()
-        exists = t.version() >= 0 and bool(t.live_files())
-        if exists:
-            records = t.read_for_keys(event_keys)
-            max_id = t.max_stat("id")
-            if max_id is None:
-                max_id = t.read().agg(
-                    F.max("id")).collect()[0][0] or 0
-        else:
-            records, max_id = empty_records(spark), 0
-        merged, changelog = merge_updates(records, events,
-                                          max_id=max_id)
-        merged = merged.localCheckpoint()
-        n = merged.count()
-        if exists:
-            deleted = event_keys.join(merged, "bibcode", "left_anti")
-            t.merge(merged, deleted_keys=deleted,
-                    merge_on_read=bool(getattr(
-                        args, "merge_on_read", False)))
-            p = t.last_merge_probe or {}
-            out["probe"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", [])),
-                "touched_files": len(p.get("touched_files", []))}
-        else:
-            t.overwrite(merged)
-    else:
-        records = _load_records(spark, args.data)
-        merged, changelog = merge_updates(records, events)
-        merged = merged.localCheckpoint()  # sever lineage pre-swap
-        n = merged.count()
-        _save_records(merged, args.data)
+    probe = _probe(t.last_merge_probe)
+    if probe:
+        out["probe"] = probe
     changelog.write.mode("append").parquet(os.path.join(args.data, "changelog"))
-    out["records"] = n
+    out["records"] = merged.count()
     print(json.dumps(out))
     return 0
 
@@ -131,40 +111,34 @@ def cmd_reindex(args) -> int:
     (run.py --index_failed)."""
     from pyspark.sql import functions as F
     from .dispatch import failed_filter, mark_processed, reindex
+    from .sinks.lake import read_records, write_metrics_sink
     from .sinks.writers import write_links_dir, write_solr_dir
     from .sources import bibcode_list
     from .storage import KeyValueStore
     from .transform import solr_docs_json
     spark = _spark()
-    fmt = getattr(args, "fmt", "parquet")
+    t = _records(spark, args)
     probes: dict = {}
     kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
     wm_key = "last.reindex.forced" if args.force else "last.reindex.normal"
     since = args.since or (None if args.force else kv.get(wm_key))
 
-    if fmt == "txn":
-        t = _records_txn(spark, args.data)
-        if (since is not None
-                and not (args.bibcodes or args.failed)):
-            # the cron tick (run.py:147-151, the reference's hottest
-            # query): stat-pruned watermark scan — files whose
-            # updated-range predates the watermark are never opened
-            # (VERDICT r6 task 3). incremental_filter still applies
-            # the exact row predicate downstream.
-            import datetime as dt
-            lo = since
-            if isinstance(lo, str):
-                lo = dt.datetime.fromisoformat(
-                    lo.replace("Z", "+00:00"))
-            records = t.read_for_range("updated", lo=lo).cache()
-            p = t.last_read_probe or {}
-            probes["watermark_scan"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", []))}
-        else:
-            records = t.read().cache()
+    if since is not None and not (args.bibcodes or args.failed):
+        # the cron tick (run.py:147-151, the reference's hottest
+        # query): on a txn table a stat-pruned watermark scan — files
+        # whose updated-range predates the watermark are never opened
+        # (VERDICT r6 task 3). incremental_filter still applies the
+        # exact row predicate downstream.
+        import datetime as dt
+        lo = since
+        if isinstance(lo, str):
+            lo = dt.datetime.fromisoformat(lo.replace("Z", "+00:00"))
+        records = t.read_for_range("updated", lo=lo).cache()
+        probe = _probe(t.last_read_probe, touched=False)
+        if probe:
+            probes["watermark_scan"] = probe
     else:
-        records = _load_records(spark, args.data).cache()
+        records = read_records(t).cache()
 
     scope = records
     if args.bibcodes:
@@ -187,30 +161,10 @@ def cmd_reindex(args) -> int:
     write_solr_dir(
         solr_docs_json(solr.drop("checksum", *mtime_cols)),
         os.path.join(out, "solr"))
-    if fmt == "txn":
-        # S7 metrics upsert as a REAL stat-pruned MERGE (VERDICT r6
-        # task 4): incoming rows (defaults applied) merge into a
-        # key-clustered TxnTable — only files whose key range can
-        # contain a batch bibcode are opened, the executed analogue
-        # of the reference's INSERT..ON CONFLICT (adsmp/app.py:45-77)
-        from .sinks.txnlake import txn_table
-        from .sinks.writers import metrics_upsert
-        incoming = metrics_upsert(None, metrics).localCheckpoint()
-        mt = txn_table(spark, os.path.join(out, "metrics"),
-                       key="bibcode", cluster_writes=True,
-                       rows_per_file=args.rows_per_file)
-        if mt.version() >= 0 and mt.live_files():
-            mt.merge(incoming)
-            p = mt.last_merge_probe or {}
-            probes["metrics_merge"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", [])),
-                "touched_files": len(p.get("touched_files", []))}
-        elif incoming.count():
-            mt.overwrite(incoming)
-    else:
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(out, "metrics"))
+    probe = _probe(write_metrics_sink(
+        t, metrics, os.path.join(out, "metrics"), args.rows_per_file))
+    if probe:
+        probes["metrics_merge"] = probe
     write_links_dir(links, os.path.join(out, "links"))
 
     updated = records
@@ -221,32 +175,27 @@ def cmd_reindex(args) -> int:
     updated = updated.localCheckpoint()
     counts: dict = {"solr": solr.count(), "metrics": metrics.count(),
                     "links": links.count()}
-    if fmt == "txn":
-        # `records` may be the watermark-PRUNED subset — the
-        # writeback must be a keyed MERGE of the touched rows, never
-        # a snapshot save (which would truncate the table to the
-        # subset). mark_processed only changed rows it saw done-keys
-        # for, all of which are in scope.
-        touched_keys = (solr.select("bibcode")
-                        .unionByName(metrics.select("bibcode"))
-                        .unionByName(links.select("bibcode"))
-                        .distinct())
-        subset = updated.join(touched_keys, "bibcode", "left_semi") \
-            .localCheckpoint()
-        if subset.count():
-            # drop the cached scan of the table's files first: a live
-            # cache entry over the same parquet paths would hijack the
-            # merge's input_file_name() probe (served from memory, no
-            # file context) and degrade its touched-file detection
-            records.unpersist()
-            t.merge(subset)
-            p = t.last_merge_probe or {}
-            probes["writeback_merge"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", [])),
-                "touched_files": len(p.get("touched_files", []))}
-    else:
-        _save_records(updated, args.data)
+    # `records` may be the watermark-PRUNED subset — the writeback is
+    # a keyed MERGE of the touched rows, never a whole-table write
+    # (which would truncate the table to the subset). mark_processed
+    # only changed rows it saw done-keys for, all of which are in
+    # scope.
+    touched_keys = (solr.select("bibcode")
+                    .unionByName(metrics.select("bibcode"))
+                    .unionByName(links.select("bibcode"))
+                    .distinct())
+    subset = updated.join(touched_keys, "bibcode", "left_semi") \
+        .localCheckpoint()
+    if subset.count():
+        # drop the cached scan of the table's files first: a live
+        # cache entry over the same parquet paths would hijack the
+        # merge's input_file_name() probe (served from memory, no
+        # file context) and degrade its touched-file detection
+        records.unpersist()
+        t.merge(subset)
+        probe = _probe(t.last_merge_probe)
+        if probe:
+            probes["writeback_merge"] = probe
     if not (args.bibcodes or args.failed):
         # a scoped run never saw the full table — advancing the
         # incremental watermark would silently skip everything else
@@ -262,32 +211,31 @@ def cmd_sitemap(args) -> int:
     """O8/O10 sitemap maintenance. ``--action auto`` is the
     update_sitemaps_auto cron shape (run.py:558-628): select
     recently-touched records, flag/extend the table, regenerate dirty
-    files. With ``--fmt txn --incremental`` the selection comes from
-    the records TxnTable's CHANGE-DATA-FEED keyed off a KV version
-    watermark (VERDICT r8 task 4) — O(changed files) instead of the
-    rescan's O(table), with the feed probe in the output JSON and the
-    watermark advancing only after the sitemap table write succeeded
-    (same rollback contract as ``outbox --incremental``); the
-    selected records are then fetched via the stat-pruned
+    files. With ``--incremental`` (txn records only) the selection
+    comes from the records table's CHANGE-DATA-FEED keyed off a KV
+    version watermark (VERDICT r8 task 4) — O(changed files) instead
+    of the rescan's O(table), with the feed probe in the output JSON
+    and the watermark advancing only after the sitemap table write
+    succeeded (same rollback contract as ``outbox --incremental``);
+    the selected records are then fetched via the stat-pruned
     ``read_for_keys``, so the table scan is O(files containing
-    selected keys) too. Rescan mode (``--since``) remains for parquet
-    records and as the equality oracle."""
+    selected keys) too. Rescan mode (``--since``) works on either
+    format and is the equality oracle."""
     from pyspark.sql import functions as F
     from . import sitemap as sm
+    from .sinks.lake import read_records
+    from .storage import KeyValueStore
     spark = _spark()
-    fmt = getattr(args, "fmt", "parquet")
+    t = _records(spark, args)
+    kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
     table_path = os.path.join(args.data, "sitemap")
     extra: dict = {}
     kv_advance = None
     if args.action == "auto":
         existing = spark.read.parquet(table_path)
-        if fmt == "txn" and args.incremental:
-            from .storage import KeyValueStore
-            t = _records_txn(spark, args.data)
-            kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
+        if args.incremental:
             vk = "last.sitemap.auto.version"
-            v_lo = int(kv.get(vk) or -1)
-            v_hi = t.version()
+            v_lo, v_hi = _feed(t, kv, vk)
             if v_hi <= v_lo:
                 print(json.dumps({
                     "rows": 0, "files": 0, "selected": 0,
@@ -297,19 +245,15 @@ def cmd_sitemap(args) -> int:
             feed = t.changes(v_lo, v_hi)
             sel = sm.auto_update_selection_from_feed(feed, existing) \
                 .localCheckpoint()
-            p = t.last_changes_probe or {}
-            extra["feed"] = {"v_lo": v_lo, "v_hi": v_hi,
-                             "files_read": len(p.get("files_read", [])),
-                             "live_files": p.get("live_files")}
+            extra["feed"] = _feed_probe(t, v_lo, v_hi)
             incoming = t.read_for_keys(sel)
-            kv_advance = (kv, vk, v_hi)
+            kv_advance = (vk, v_hi)
         else:
             if not args.since:
                 raise SystemExit(
                     "sitemap --action auto needs --since TS (rescan "
-                    "mode) or --fmt txn --incremental (change feed)")
-            records = (_records_txn(spark, args.data).read()
-                       if fmt == "txn" else _load_records(spark, args.data))
+                    "mode) or --incremental (change feed)")
+            records = read_records(t)
             sel = sm.auto_update_selection(records, existing, args.since) \
                 .localCheckpoint()
             incoming = records.join(F.broadcast(sel), "bibcode",
@@ -327,19 +271,15 @@ def cmd_sitemap(args) -> int:
     elif args.action == "cleanup":
         # O9 — the reference's sitemap cleanup rescans the FULL records
         # table per run (adsmp/tasks.py:482-583; the rescan branch
-        # keeps that shape as the equality oracle). With ``--fmt txn
-        # --incremental`` the invalidation set comes from the change
+        # keeps that shape as the equality oracle). With
+        # ``--incremental`` the invalidation set comes from the change
         # feed instead, keyed off its own KV version watermark — the
         # last rescanning consumer now reads O(changed files) per tick
         # (VERDICT r9 task 3).
         existing = spark.read.parquet(table_path)
-        if fmt == "txn" and args.incremental:
-            from .storage import KeyValueStore
-            t = _records_txn(spark, args.data)
-            kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
+        if args.incremental:
             vk = "last.sitemap.cleanup.version"
-            v_lo = int(kv.get(vk) or -1)
-            v_hi = t.version()
+            v_lo, v_hi = _feed(t, kv, vk)
             if v_hi <= v_lo:
                 # idle tick: nothing to derive, nothing to scan
                 print(json.dumps({
@@ -351,35 +291,24 @@ def cmd_sitemap(args) -> int:
             feed = t.changes(v_lo, v_hi)
             sel = sm.cleanup_selection_from_feed(feed, existing) \
                 .localCheckpoint()
-            p = t.last_changes_probe or {}
-            extra["feed"] = {"v_lo": v_lo, "v_hi": v_hi,
-                             "files_read": len(p.get("files_read", [])),
-                             "live_files": p.get("live_files")}
-            extra["removed"] = sel.count()
-            table, emptied = sm.remove_records(existing, sel)
-            kv_advance = (kv, vk, v_hi)
+            extra["feed"] = _feed_probe(t, v_lo, v_hi)
+            kv_advance = (vk, v_hi)
         else:
-            records = (_records_txn(spark, args.data).read()
-                       if fmt == "txn" else _load_records(spark, args.data))
             # one materialized selection, one remove pass (the naive
             # existing.count() - table.count() executed the whole
             # cleanup join pipeline twice) — identical to sm.cleanup
-            valid = sm.should_include(records).select("bibcode")
+            valid = sm.should_include(read_records(t)).select("bibcode")
             sel = (existing.select("bibcode")
                    .join(valid, "bibcode", "left_anti")
                    .distinct().localCheckpoint())
-            extra["removed"] = sel.count()
-            table, emptied = sm.remove_records(existing, sel)
+        extra["removed"] = sel.count()
+        table, emptied = sm.remove_records(existing, sel)
         extra["emptied"] = emptied
     elif args.action == "bootstrap":
-        records = (_records_txn(spark, args.data).read()
-                   if fmt == "txn" else _load_records(spark, args.data))
-        table = sm.bootstrap(records)
+        table = sm.bootstrap(read_records(t))
     else:
-        records = (_records_txn(spark, args.data).read()
-                   if fmt == "txn" else _load_records(spark, args.data))
         existing = spark.read.parquet(table_path)
-        table = sm.add_records(existing, records, force=args.force)
+        table = sm.add_records(existing, read_records(t), force=args.force)
     table = table.localCheckpoint()
     out = args.out or os.path.join(args.data, "sitemap_files")
     only_dirty = args.action != "bootstrap"
@@ -431,7 +360,7 @@ def cmd_sitemap(args) -> int:
                     os.remove(fp)
     cleared.write.mode("overwrite").parquet(table_path)
     if kv_advance is not None:
-        kv, vk, v_hi = kv_advance      # only after the table write
+        vk, v_hi = kv_advance          # only after the table write
         kv.put(vk, str(v_hi))
     print(json.dumps({"rows": table.count(), "files": total, **extra}))
     return 0
@@ -446,9 +375,10 @@ def cmd_rebuild(args) -> int:
     recovery path for sink corruption."""
     import shutil
     from .dispatch import reindex
+    from .sinks.lake import read_records
     from .transform import solr_docs_json
     spark = _spark()
-    records = _load_records(spark, args.data)
+    records = read_records(_records(spark, args))
     batches = reindex(records, force=True, ignore_checksums=True)
     solr = batches["solr"]
     live = args.out or os.path.join(args.data, "sinks", "solr")
@@ -472,15 +402,20 @@ def cmd_rebuild(args) -> int:
 
 def cmd_gc(args) -> int:
     """M8 — delete obsolete records (run.py:258-293): drop rows with no
-    bib_data whose last update predates the cutoff."""
+    bib_data whose last update predates the cutoff, as a keyed MERGE
+    of tombstones."""
+    from .sinks.lake import read_records
     from .storage import delete_obsolete_records
     spark = _spark()
-    records = _load_records(spark, args.data)
-    before = records.count()
-    kept = delete_obsolete_records(records, args.cutoff).localCheckpoint()
-    after = kept.count()
-    _save_records(kept, args.data)
-    print(json.dumps({"deleted": before - after, "kept": after}))
+    t = _records(spark, args)
+    records = read_records(t)
+    kept = delete_obsolete_records(records, args.cutoff)
+    gone = records.select("bibcode").join(
+        kept.select("bibcode"), "bibcode", "left_anti").localCheckpoint()
+    deleted, n_kept = gone.count(), kept.count()
+    if deleted:                        # tombstones only, no upserts
+        t.merge(records.limit(0), deleted_keys=gone)
+    print(json.dumps({"deleted": deleted, "kept": n_kept}))
     return 0
 
 
@@ -488,9 +423,11 @@ def cmd_scixid(args) -> int:
     """M7 scix_id maintenance (task_update_scixid flag modes,
     adsmp/tasks.py:210-275): update / force / reset over the records
     table, optionally limited to a bibcode list file (one per line)."""
+    from .sinks.lake import read_records
     from .storage import update_scix_ids
     spark = _spark()
-    records = _load_records(spark, args.data)
+    t = _records(spark, args)
+    records = read_records(t)
     bibs = None
     if args.bibcodes:
         with open(args.bibcodes, encoding="utf-8") as f:
@@ -498,7 +435,7 @@ def cmd_scixid(args) -> int:
     before = records.where("scix_id IS NOT NULL").count()
     out = update_scix_ids(records, args.flag, bibs).localCheckpoint()
     after = out.where("scix_id IS NOT NULL").count()
-    _save_records(out, args.data)
+    t.overwrite(out)
     print(json.dumps({"flag": args.flag, "with_scix_before": before,
                       "with_scix_after": after}))
     return 0
@@ -508,10 +445,10 @@ def cmd_diag(args) -> int:
     """run.py -d/-k parity: one JSON of table + dispatch health and
     the KV store contents — the operational at-a-glance check."""
     from pyspark.sql import functions as F
+    from .sinks.lake import read_records
     from .storage import KeyValueStore
     spark = _spark()
-    records = _load_records(spark, args.data)
-    agg = records.agg(
+    agg = read_records(_records(spark, args)).agg(
         F.count(F.lit(1)).alias("records"),
         F.count("bib_data").alias("with_bib_data"),
         F.count("scix_id").alias("with_scix_id"),
@@ -532,18 +469,22 @@ def cmd_diag(args) -> int:
 
 def cmd_delete(args) -> int:
     """run.py --delete parity: remove a file of bibcodes from the
-    records table, emit solr tombstones, and (when a sitemap table
-    exists) anti-join it too, reporting files emptied by the removal."""
+    records table (a keyed MERGE of tombstones), emit solr tombstones,
+    and (when a sitemap table exists) anti-join it too, reporting
+    files emptied by the removal."""
     from pyspark.sql import functions as F
     from . import sitemap as sm
+    from .sinks.lake import read_records
     from .sources import bibcode_list
     spark = _spark()
-    records = _load_records(spark, args.data)
+    t = _records(spark, args)
+    records = read_records(t)
     bibs = bibcode_list(spark, args.bibcodes).cache()
-    survivors = records.join(F.broadcast(bibs), "bibcode", "left_anti") \
-        .localCheckpoint()
-    deleted = records.count() - survivors.count()
-    _save_records(survivors, args.data)
+    gone = records.select("bibcode").join(
+        F.broadcast(bibs), "bibcode", "left_semi").localCheckpoint()
+    deleted = gone.count()
+    if deleted:
+        t.merge(records.limit(0), deleted_keys=gone)
     out = args.out or os.path.join(args.data, "sinks")
     bibs.select("bibcode").write.mode("overwrite") \
         .json(os.path.join(out, "solr_deletes"))
@@ -566,8 +507,8 @@ def cmd_outbox(args) -> int:
     batches for the downstream pipelines and write them to the outbox
     directory (the HTTP/queue adapter's pickup point).
 
-    ``--fmt txn --incremental`` feeds the derivation from the
-    TxnTable CHANGE-DATA-FEED instead of a full-table rescan
+    ``--incremental`` (txn records only) feeds the derivation from
+    the TxnTable CHANGE-DATA-FEED instead of a full-table rescan
     (VERDICT r7 task 1's wired consumer): only rows actually
     inserted/updated since the last emitted version produce requests
     — O(changed files), with the feed's probe in the output JSON —
@@ -591,20 +532,20 @@ def cmd_outbox(args) -> int:
 
     from .outbox import (aff_augment_requests, boost_requests,
                          classify_requests, write_outbox)
+    from .sinks.lake import read_records
     from .storage import KeyValueStore
     spark = _spark()
+    t = _records(spark, args)
     fn = {"augment": aff_augment_requests,
           "boost": boost_requests,
           "classify": classify_requests}[args.kind]
     out = args.out or os.path.join(args.data, "outbox", args.kind)
     result: dict = {"kind": args.kind}
 
-    if getattr(args, "fmt", "parquet") == "txn" and args.incremental:
-        t = _records_txn(spark, args.data)
+    if args.incremental:
         kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
         vk = f"last.outbox.{args.kind}.version"
-        v_lo = int(kv.get(vk) or -1)
-        v_hi = t.version()
+        v_lo, v_hi = _feed(t, kv, vk)
         if v_hi <= v_lo:
             result["requests"] = 0
             result["feed"] = {"v_lo": v_lo, "v_hi": v_hi,
@@ -627,19 +568,13 @@ def cmd_outbox(args) -> int:
         batch_dir = os.path.join(out, f"v{v_lo + 1:08d}-{v_hi:08d}")
         write_outbox(requests, batch_dir)
         kv.put(vk, str(v_hi))          # advance only after the write
-        p = t.last_changes_probe or {}
         result["requests"] = requests.count()
         result["batch_dir"] = batch_dir
-        result["feed"] = {"v_lo": v_lo, "v_hi": v_hi,
-                          "files_read": len(p.get("files_read", [])),
-                          "live_files": p.get("live_files")}
+        result["feed"] = _feed_probe(t, v_lo, v_hi)
         print(json.dumps(result))
         return 0
 
-    records = (_records_txn(spark, args.data).read()
-               if getattr(args, "fmt", "parquet") == "txn"
-               else _load_records(spark, args.data))
-    requests = fn(records)
+    requests = fn(read_records(t))
     write_outbox(requests, out)
     result["requests"] = requests.count()
     print(json.dumps(result))
@@ -930,6 +865,11 @@ def cmd_lake(args) -> int:
     return 0
 
 
+# the table on disk states its format; the flag only cross-checks it
+FMT_HELP = ("records format, checked against the table on disk (a "
+            "mismatch exits 1)")
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="adsmasterpipeline_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -938,9 +878,10 @@ def main(argv=None) -> int:
     pi.add_argument("--events", required=True)
     pi.add_argument("--data", required=True)
     pi.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet",
-                    help="records storage: parquet snapshot swap or "
-                    "log-structured TxnTable (stat-pruned MERGE)")
+                    help="format of a records table this run creates: "
+                    "parquet snapshot swap (default) or log-structured "
+                    "TxnTable (stat-pruned MERGE); an existing table "
+                    "keeps its own")
     pi.add_argument("--rows-per-file", type=int, default=500_000,
                     help="txn fmt: target rows per key-clustered file")
     pi.add_argument("--merge-on-read", action="store_true",
@@ -959,11 +900,7 @@ def main(argv=None) -> int:
                     "restricts the run and skips the watermark")
     pr.add_argument("--failed", action="store_true",
                     help="reselect rows whose last dispatch failed")
-    pr.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet",
-                    help="txn: stat-pruned watermark scan, MERGE "
-                    "writeback, and a TxnTable metrics upsert; the "
-                    "output JSON carries the file-skipping probes")
+    pr.add_argument("--fmt", choices=("parquet", "txn"), help=FMT_HELP)
     pr.add_argument("--rows-per-file", type=int, default=500_000,
                     help="txn fmt: target rows per clustered file "
                     "of the metrics table")
@@ -976,13 +913,11 @@ def main(argv=None) -> int:
                     choices=("bootstrap", "update", "auto", "cleanup"),
                     default="update")
     ps.add_argument("--force", action="store_true")
-    ps.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet",
-                    help="records storage the selection reads from")
+    ps.add_argument("--fmt", choices=("parquet", "txn"), help=FMT_HELP)
     ps.add_argument("--incremental", action="store_true",
-                    help="auto/cleanup + txn: select from the records "
-                    "change feed since the KV version watermark "
-                    "instead of rescanning (O(changed files))")
+                    help="auto/cleanup, txn records only: select from "
+                    "the records change feed since the KV version "
+                    "watermark instead of rescanning (O(changed files))")
     ps.add_argument("--since",
                     help="auto rescan mode: ISO cutoff for "
                     "bib_data_updated/solr_processed")
@@ -1023,10 +958,9 @@ def main(argv=None) -> int:
     po.add_argument("--kind", choices=("augment", "boost", "classify"),
                     required=True)
     po.add_argument("--out")
-    po.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet")
+    po.add_argument("--fmt", choices=("parquet", "txn"), help=FMT_HELP)
     po.add_argument("--incremental", action="store_true",
-                    help="txn only: derive requests from the change-"
+                    help="txn records only: derive requests from the change-"
                          "data-feed since the last emitted version "
                          "instead of a full-table rescan")
     po.set_defaults(fn=cmd_outbox)
@@ -1090,7 +1024,12 @@ def main(argv=None) -> int:
     pv.set_defaults(fn=cmd_validate)
 
     args = p.parse_args(argv)
-    return args.fn(args)
+    from .sinks.lake import RecordsFormatError
+    try:
+        return args.fn(args)
+    except RecordsFormatError as e:
+        print(json.dumps({"error": str(e)}))
+        return 1
 
 
 if __name__ == "__main__":

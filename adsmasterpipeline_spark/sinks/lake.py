@@ -1,28 +1,26 @@
-"""Lake-format record sink: the ACID upsert boundary.
+"""The records store: the one module that knows the records table's
+storage format.
 
 The reference's records table is Postgres with per-row transactional
 upserts (``update_storage``, adsmp/app.py:45-77, :120-195). The Spark
 engine computes merges set-at-a-time (``storage.merge_updates``) and
-persists through ONE narrow interface — this module — so swapping the
-storage format is a sink change, not a logic change (the claim made in
-SCALE.md):
+reads and writes the table through this module only, so the CLI and
+the streaming classes run one upsert path whatever the format.
 
-- ``format="parquet"`` (default): copy-on-write — stage the full new
-  table, atomically swap directories. What the tests and the driver
-  run; correct at any scale, rewrite-amplified at 100 TB.
-- ``format="txn"``: a REAL executed file-granular MERGE via the
-  in-repo log-structured table (sinks/txnlake.py — atomic log
-  commits, whenMatchedDelete tombstones, idempotent app txn ids,
-  time travel): only files containing matched keys rewrite. This is
-  the path that actually RUNS in this container; delta-spark cannot
-  be installed here (no package index reachable — verified), so the
-  MERGE semantics are proven on this implementation.
-- ``format="delta"``: the same ``MERGE INTO`` via delta-spark where
-  that extra (and its jars) is deployed — import-gated; the branch
-  shape is covered by the stub test, the semantics by the txn path.
+A table states its own format on disk; ``fmt`` only names the format
+of a table that does not exist yet:
 
-All paths consume the SAME inputs: the merged table (or its touched
-subset) and the delete keys, exactly what ``merge_updates`` computes.
+- ``"txn"``: the in-repo log-structured table (sinks/txnlake.py):
+  atomic log commits, a file-granular MERGE that rewrites only the
+  files holding matched keys, idempotent app txn ids, a change feed
+  and time travel. The scale setting.
+- ``"parquet"`` (default): a copy-on-write snapshot. Every write
+  stages the full new table and atomically repoints a symlink. Kept
+  as the reference the txn path is compared against.
+
+Both stores answer the same calls: ``live_files``, ``read``,
+``read_for_keys``, ``read_for_range``, ``max_stat``,
+``merge(changed, deleted_keys)`` and ``overwrite``.
 """
 
 from __future__ import annotations
@@ -33,28 +31,206 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from .txnlake import TxnTable, txn_table
+
+FORMATS = ("parquet", "txn")
 
 
-def write_records(records: DataFrame, path: str, fmt: str = "parquet",
-                  key: str = "bibcode", **txn_opts) -> None:
-    """Persist the records table.
+class RecordsFormatError(ValueError):
+    """A caller asked for something the table's format cannot give:
+    a format that contradicts the table on disk, or a change feed
+    from a parquet snapshot."""
 
-    parquet: full copy-on-write snapshot swap (staging dir + rename).
-    delta: initial write creates the table; subsequent calls should use
-    :func:`merge_records` with the touched subset instead.
-    """
-    if fmt == "delta":
-        _require_delta()
-        records.write.format("delta").mode("overwrite").save(path)
-        return
-    if fmt == "txn":
-        from .txnlake import txn_table
-        txn_table(records.sparkSession, path, key,
-                  **txn_opts).overwrite(records)
-        return
-    staging = f"{path}.v-{uuid.uuid4().hex[:8]}"
-    records.write.mode("overwrite").parquet(staging)
-    publish_snapshot_dir(path, staging)
+
+def open_records(spark, path: str, fmt: str | None = None, **txn_opts):
+    """The table at ``path`` in the format it was created with: a
+    ``TxnTable`` when ``<path>/_txn`` exists, the parquet snapshot
+    store when ``<path>`` is a snapshot, and for a missing table one
+    in format ``fmt`` (default parquet). ``txn_opts`` configure a txn
+    table and are ignored for a snapshot. Raises RecordsFormatError
+    when ``fmt`` contradicts the table on disk."""
+    on_disk = ("txn" if os.path.isdir(os.path.join(path, "_txn"))
+               else "parquet" if os.path.exists(path) else None)
+    if fmt is not None and fmt not in FORMATS:
+        raise RecordsFormatError(f"unknown records format {fmt!r}")
+    if on_disk is not None and fmt is not None and fmt != on_disk:
+        raise RecordsFormatError(
+            f"the table at {path} is {on_disk}; it cannot be used as "
+            f"{fmt} (the format is chosen when the table is created)")
+    if (on_disk or fmt) == "txn":
+        return txn_table(spark, path, **txn_opts)
+    return SnapshotTable(spark, path)
+
+
+def require_change_feed(table) -> None:
+    """Refuse a feed consumer on a parquet snapshot, which keeps no
+    change feed (only a txn table does)."""
+    if not isinstance(table, TxnTable):
+        raise RecordsFormatError(
+            f"the table at {table.path} is parquet, which keeps no "
+            f"change feed; --incremental needs a txn table")
+
+
+def read_records(table) -> DataFrame:
+    """Every live row; the empty records frame for a table not yet
+    created or emptied by deletes."""
+    from ..storage import empty_records
+    if table.live_files():
+        return table.read()
+    return empty_records(table.spark)
+
+
+def merge_events(table, events: DataFrame, now=None):
+    """Fold an event batch into the rows of its keys — the load half
+    of the upsert: read only the rows of the batch's keys
+    (``read_for_keys``), continue insert ids from the table-wide max
+    (a driver-side stat fold, a column scan only when a file lacks
+    the stat), then ``merge_updates``.
+
+    Returns ``(merged, changelog, deleted)``: ``merged`` holds the
+    post-merge rows of the batch's keys, pinned with
+    ``localCheckpoint``; ``deleted`` the batch keys that the events
+    removed, or None when the table has no rows yet (publish then
+    writes the whole table)."""
+    from ..storage import empty_records, merge_updates
+    keys = events.select(table.key).distinct()
+    exists = bool(table.live_files())
+    if exists:
+        records = table.read_for_keys(keys)
+        max_id = table.max_stat("id")
+        if max_id is None:
+            max_id = table.read().agg(F.max("id")).collect()[0][0] or 0
+    else:
+        records, max_id = empty_records(table.spark), 0
+    merged, changelog = merge_updates(records, events, now=now,
+                                      max_id=max_id)
+    merged = merged.localCheckpoint()
+    deleted = keys.join(merged, table.key, "left_anti") if exists else None
+    return merged, changelog, deleted
+
+
+def publish(table, merged: DataFrame, deleted: DataFrame | None,
+            app_txn_id: str | None = None, merge_on_read: bool = False):
+    """The write half of the upsert: MERGE the rows and tombstones
+    into an existing table, or write a new one. Returns the txn
+    table's version (unchanged when ``app_txn_id`` was already
+    applied), None for a snapshot."""
+    if deleted is None:
+        return table.overwrite(merged, app_txn_id=app_txn_id)
+    return table.merge(merged, deleted_keys=deleted,
+                       app_txn_id=app_txn_id, merge_on_read=merge_on_read)
+
+
+def apply_events(table, events: DataFrame, now=None,
+                 app_txn_id: str | None = None,
+                 merge_on_read: bool = False):
+    """Upsert an event batch: ``merge_events`` then ``publish``. On a
+    txn table this is O(touched files + batch), not O(table).
+    Returns ``(merged, changelog, version)``."""
+    merged, changelog, deleted = merge_events(table, events, now=now)
+    version = publish(table, merged, deleted, app_txn_id=app_txn_id,
+                      merge_on_read=merge_on_read)
+    return merged, changelog, version
+
+
+def write_metrics_sink(records_table, metrics: DataFrame, path: str,
+                       rows_per_file: int):
+    """Write one reindex batch's metrics rows to the metrics sink, in
+    the records table's format. Next to a txn records table the sink
+    is a key-clustered txn table each batch MERGEs into (defaults
+    applied) — only files whose key range can hold a batch bibcode
+    are opened, the executed analogue of the reference's INSERT .. ON
+    CONFLICT (adsmp/app.py:45-77). Next to a parquet snapshot each
+    batch replaces the sink directory. Returns the txn merge probe,
+    else None."""
+    if not isinstance(records_table, TxnTable):
+        metrics.write.mode("overwrite").parquet(path)
+        return None
+    from .writers import metrics_upsert
+    incoming = metrics_upsert(None, metrics).localCheckpoint()
+    mt = txn_table(records_table.spark, path, key="bibcode",
+                   cluster_writes=True, rows_per_file=rows_per_file)
+    if mt.live_files():
+        mt.merge(incoming)
+        return mt.last_merge_probe
+    if incoming.count():
+        mt.overwrite(incoming)
+    return None
+
+
+class SnapshotTable:
+    """A parquet records table published as copy-on-write snapshots:
+    every write stages the full new table and atomically swaps it in
+    (``publish_snapshot_dir``). Correct at any scale but rewrite-
+    amplified; it keeps no versions, statistics or change feed, so the
+    txn-only arguments ``app_txn_id`` and ``merge_on_read`` are
+    accepted and ignored."""
+
+    key = "bibcode"
+    # no file-skipping probes to report
+    last_read_probe = None
+    last_merge_probe = None
+
+    def __init__(self, spark, path: str):
+        self.spark = spark
+        self.path = os.path.abspath(path)
+
+    def live_files(self) -> list[str]:
+        if not os.path.isdir(self.path):
+            return []
+        return sorted(n for n in os.listdir(self.path)
+                      if n.startswith("part-"))
+
+    def read(self) -> DataFrame:
+        return self.spark.read.parquet(self.path)
+
+    def read_for_keys(self, keys: DataFrame) -> DataFrame:
+        # pinned: the rows (and the changelog pre-images derived from
+        # them) must outlive the snapshot a merge swaps out
+        return (self.read()
+                .join(keys.select(self.key).distinct(), self.key,
+                      "left_semi")
+                .localCheckpoint())
+
+    def read_for_range(self, col: str, lo=None, hi=None) -> DataFrame:
+        df = self.read()
+        if lo is not None:
+            df = df.where(F.col(col) >= F.lit(lo))
+        if hi is not None:
+            df = df.where(F.col(col) <= F.lit(hi))
+        return df
+
+    def max_stat(self, col: str):
+        return None          # no per-file statistics: callers scan
+
+    def merge(self, changed: DataFrame,
+              deleted_keys: DataFrame | None = None,
+              app_txn_id: str | None = None,
+              merge_on_read: bool = False) -> None:
+        """Upsert ``changed`` (full post-merge rows) and drop
+        ``deleted_keys`` by rewriting the whole snapshot."""
+        key = self.key
+        survivors = self.read().join(changed.select(key), key, "left_anti")
+        if deleted_keys is not None:
+            survivors = survivors.join(deleted_keys.select(key), key,
+                                       "left_anti")
+            changed = changed.join(deleted_keys.select(key), key,
+                                   "left_anti")
+        # the union must be materialized off the source snapshot
+        # before the swap removes it
+        self.overwrite(survivors.unionByName(changed).localCheckpoint())
+
+    def overwrite(self, df: DataFrame,
+                  app_txn_id: str | None = None) -> None:
+        staging = f"{self.path}.v-{uuid.uuid4().hex[:8]}"
+        df.write.mode("overwrite").parquet(staging)
+        publish_snapshot_dir(self.path, staging)
+        # The swap happens behind Spark's back: a cached relation over
+        # the path (cmd_reindex caches records) would keep serving the
+        # pre-swap rows to every later read in this session.
+        self.spark.catalog.refreshByPath(self.path)
 
 
 def publish_snapshot_dir(path: str, staging: str) -> None:
@@ -95,10 +271,10 @@ def publish_snapshot_dir(path: str, staging: str) -> None:
         if prev and prev != staging:
             shutil.rmtree(prev, ignore_errors=True)
     # sweep orphan snapshot dirs / temp pointers from crashed attempts.
-    # Snapshot dirs match ONLY the exact generated shapes —
-    # ``base.v-<8 hex>`` (write_records / cli) and
-    # ``base.v<epoch digits>-<8 hex>`` (streaming) — a bare
-    # ``base + ".v"`` prefix test also swept UNRELATED siblings like
+    # Snapshot dirs match ONLY the exact generated shape
+    # ``base.v-<8 hex>`` (an older streaming writer also left
+    # ``base.v<epoch digits>-<8 hex>``) — a bare ``base + ".v"``
+    # prefix test also swept UNRELATED siblings like
     # ``records.v2_backup`` or ``records.vocab`` on every publish
     # (ADVICE r7: silent deletion of a neighbor dataset).
     cur = os.path.realpath(path)
@@ -116,60 +292,3 @@ def publish_snapshot_dir(path: str, staging: str) -> None:
                 os.unlink(full)
             else:
                 shutil.rmtree(full, ignore_errors=True)
-
-
-def merge_records(spark, changed: DataFrame, deleted_keys: DataFrame,
-                  path: str, fmt: str = "parquet",
-                  key: str = "bibcode", **txn_opts) -> None:
-    """Apply an incremental merge result to the stored table.
-
-    ``changed``: full rows for inserted/updated keys (post-merge state).
-    ``deleted_keys``: single-column frame of keys to remove.
-    """
-    if fmt == "txn":
-        from .txnlake import txn_table
-        txn_table(spark, path, key,
-                  **txn_opts).merge(changed, deleted_keys)
-        return
-    if fmt == "delta":
-        _require_delta()
-        from delta.tables import DeltaTable  # pragma: no cover
-        t = DeltaTable.forPath(spark, path)
-        (t.alias("t")
-         .merge(changed.alias("s"), f"t.{key} = s.{key}")
-         .whenMatchedUpdateAll()
-         .whenNotMatchedInsertAll()
-         .execute())
-        # Tombstones stay distributed: a second MERGE with matched-delete,
-        # never a collect-into-IN-list (a real deletion batch is millions
-        # of keys — driver OOM + unbounded SQL text). distinct() because
-        # MERGE rejects multiple source rows matching one target (two
-        # delete events for one key in a batch is normal).
-        (t.alias("t")
-         .merge(deleted_keys.select(key).distinct().alias("s"),
-                f"t.{key} = s.{key}")
-         .whenMatchedDelete()
-         .execute())
-        return
-
-    existing = spark.read.parquet(path)
-    survivors = (existing
-                 .join(changed.select(key), key, "left_anti")
-                 .join(deleted_keys, key, "left_anti"))
-    merged = survivors.unionByName(
-        changed.join(deleted_keys, key, "left_anti"))
-    # copy-on-write: the union must be materialized off the source dir
-    # before the swap destroys it
-    merged = merged.localCheckpoint()
-    write_records(merged, path, fmt="parquet", key=key)
-
-
-def _require_delta() -> None:
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        raise NotImplementedError(
-            "delta-spark is not installed in this environment; the "
-            "parquet copy-on-write path is the tested default — the "
-            "delta path swaps in when the extra (and its jars) are "
-            "deployed")

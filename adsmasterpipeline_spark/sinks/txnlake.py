@@ -5,11 +5,11 @@ probe pruning, log checkpointing, and time travel.
 
 Why this exists: the production upsert boundary wants ``MERGE INTO``
 semantics (the reference's per-row transactional upsert,
-/root/reference/adsmp/app.py:45-77, recast set-at-a-time), and the
-``fmt="delta"`` branch in sinks/lake.py is the preferred deployment —
-but delta-spark cannot be installed in this environment (no package
-index reachable), so until round 4 the MERGE path had only ever run
-against a stub. This module is a from-scratch implementation of the
+adsmp/app.py:45-77, recast set-at-a-time). Until
+round 4 the MERGE path had only ever run against a delta-spark stub;
+that branch is gone, and this module is the records table's
+transactional format (``fmt="txn"`` in sinks/lake.py). It is a
+from-scratch implementation of the
 subset of the PUBLIC Delta transaction-log protocol (Armbrust et al.,
 "Delta Lake: High-Performance ACID Table Storage over Cloud Object
 Stores", VLDB 2020) that the sink contract needs, so the merge path

@@ -12,8 +12,9 @@ column (ingest day, source) so that
   new batch: ``partitionOverwriteMode=dynamic`` replaces touched
   day-directories at commit time and leaves every other partition's
   files untouched (commit-protocol atomicity only — crash-safe
-  multi-file commits need a table format with a log, the
-  Delta/Iceberg boundary in sinks/lake.py) — the pattern behind the reference's nightly incremental
+  multi-file commits need a table format with a log, the txn
+  records table in sinks/txnlake.py) — the pattern behind the
+  reference's nightly incremental
   runs (full-table rewrite per batch is the classic lake anti-pattern
   at scale).
 
@@ -93,8 +94,8 @@ def compact_partition(spark: SparkSession, path: str, part_col: str,
     dynamic overwrite is atomic only at the commit-protocol level — a
     crash mid-commit can leave the partition partial. The checkpoint
     removes the read-own-input hazard within a healthy run; CRASH
-    safety across runs needs a table format with a log (the
-    Delta/Iceberg boundary in sinks/lake.py).
+    safety across runs needs a table format with a log (the txn
+    records table in sinks/txnlake.py).
     """
     from pyspark.sql import functions as F
     part = (spark.read.parquet(f"{path}/{part_col}={part_val}")

@@ -29,48 +29,92 @@ def events_dir(tmp_path):
 
 
 @pytest.mark.slow
-def test_cli_lifecycle(spark, tmp_path, events_dir, capsys):
+@pytest.mark.parametrize("fmt", ["parquet", "txn"])
+def test_cli_lifecycle(spark, tmp_path, events_dir, capsys, fmt):
+    """Every records command on a table of each format. Only the first
+    ingest names the format; every later command reads it from disk,
+    and a --fmt that contradicts the table is refused untouched."""
+    import os
+
     data = str(tmp_path / "data")
 
-    assert main(["ingest", "--events", str(events_dir), "--data", data]) == 0
-    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]) \
-        == {"records": 4}
+    def run(*argv):
+        assert main(list(argv)) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
-    assert main(["reindex", "--data", data]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"solr": 4, "metrics": 0, "links": 4}
+    def counts(out):
+        return {k: out[k] for k in ("solr", "metrics", "links")}
 
+    assert run("ingest", "--events", str(events_dir), "--data", data,
+               "--fmt", fmt) == {"records": 4}
+    assert counts(run("reindex", "--data", data)) \
+        == {"solr": 4, "metrics": 0, "links": 4}
     # idempotent second run (checksums + watermark persisted on disk)
-    assert main(["reindex", "--data", data]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"solr": 0, "metrics": 0, "links": 0}
+    assert counts(run("reindex", "--data", data)) \
+        == {"solr": 0, "metrics": 0, "links": 0}
 
-    assert main(["sitemap", "--data", data, "--action", "bootstrap"]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    # a second ingest (one newer title) merges into the same table
+    upd = tmp_path / "upd"
+    upd.mkdir()
+    (upd / "u.json").write_text(json.dumps({
+        "bibcode": "E01", "type": "bib_data", "status": "active",
+        "payload": json.dumps({"bibcode": "E01", "title": ["T1 v2"]}),
+        "event_ts": "2024-02-01T00:00:00.000Z"}))
+    assert run("ingest", "--events", str(upd), "--data", data)["records"] == 1
+    assert counts(run("reindex", "--data", data)) \
+        == {"solr": 1, "metrics": 0, "links": 0}
+    diag = run("diag", "--data", data)
+    assert (diag["records"], diag["with_bib_data"], diag["solr_pending"]) \
+        == (4, 4, 0)
+
+    out = run("sitemap", "--data", data, "--action", "bootstrap")
     assert out["rows"] == 4
     assert (tmp_path / "data" / "sitemap_files" / "ads"
             / "sitemap_bib_1.xml").exists()
 
-    assert main(["rebuild", "--data", data, "--min-docs", "2"]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"docs": 4, "swapped": True}
-
+    assert run("rebuild", "--data", data, "--min-docs", "2") \
+        == {"docs": 4, "swapped": True}
     # failed acceptance gate: nonzero exit, live sink untouched
     assert main(["rebuild", "--data", data, "--min-docs", "99"]) == 1
     assert (tmp_path / "data" / "sinks" / "solr").exists()
 
-    assert main(["gc", "--data", data, "--cutoff", "2030-01-01"]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    out = run("gc", "--data", data, "--cutoff", "2030-01-01")
     assert out["kept"] == 4  # all rows have bib_data -> not GC'd
 
     # scixid flag modes round-trip through the CLI
-    assert main(["scixid", "--data", data, "--flag", "reset"]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"flag": "reset", "with_scix_before": 4,
-                   "with_scix_after": 0}
-    assert main(["scixid", "--data", data, "--flag", "update"]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["with_scix_after"] == 4
+    assert run("scixid", "--data", data, "--flag", "reset") \
+        == {"flag": "reset", "with_scix_before": 4, "with_scix_after": 0}
+    assert run("scixid", "--data", data, "--flag",
+               "update")["with_scix_after"] == 4
+
+    bibfile = tmp_path / "gone.txt"
+    bibfile.write_text("E03\n")
+    assert run("delete", "--data", data, "--bibcodes",
+               str(bibfile))["deleted"] == 1
+    assert run("diag", "--data", data)["records"] == 3
+
+    # a --fmt that contradicts the table on disk: exit 1, the error
+    # names the table's format, and the table is left as it was
+    records = os.path.join(data, "records")
+
+    def state():
+        return sorted((r, f, os.path.getsize(os.path.join(r, f)))
+                      for r, _d, fs in os.walk(os.path.realpath(records))
+                      for f in fs)
+
+    before = state()
+    other = "parquet" if fmt == "txn" else "txn"
+    assert main(["reindex", "--data", data, "--fmt", other]) == 1
+    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert f"is {fmt}" in err["error"]
+    assert state() == before
+    assert os.path.isdir(os.path.join(records, "_txn")) == (fmt == "txn")
+    if fmt == "parquet":
+        # a snapshot keeps no change feed: refused, not a silent rescan
+        assert main(["outbox", "--data", data, "--kind", "boost",
+                     "--incremental"]) == 1
+        err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert "change feed" in err["error"]
 
 
 @pytest.mark.slow

@@ -20,6 +20,8 @@ import os
 
 import pytest
 
+from adsmasterpipeline_spark.sinks.lake import open_records
+
 
 def _event(bibcode, i):
     return {"bibcode": bibcode, "type": "bib_data", "status": "active",
@@ -60,7 +62,7 @@ def test_txn_insert_epoch_never_scans_table(spark, tmp_path):
     _write_events(events_dir, "boot.json",
                   [_event(f"B{i:03d}", i) for i in range(8)])
     ing.run_available_now()
-    t = ing._txn()
+    t = open_records(spark, ing.records_path)
     ids0 = {r["bibcode"]: r["id"] for r in
             t.read().select("bibcode", "id").collect()}
     assert set(ids0.values()) == set(range(1, 9))
@@ -161,7 +163,7 @@ def test_txn_stream_auto_cleanup_bounds_log_listing(spark, tmp_path):
         _write_events(str(events_dir), f"e{e}.json",
                       [_event(f"B{e:02d}{i}", i) for i in range(4)])
         ing.run_available_now()
-    t = ing._txn()
+    t = open_records(spark, ing.records_path)
     assert t.read().count() == 40
     log = os.path.join(str(base / "records"), "_txn")
     entries = [n for n in os.listdir(log)
@@ -186,7 +188,7 @@ def test_txn_stream_constraint_epoch_fails_clean_then_retries(
     _write_events(events_dir, "boot.json",
                   [_event(f"G{i}", i) for i in range(4)])
     ing.run_available_now()                                      # v0
-    t = ing._txn()
+    t = open_records(spark, ing.records_path)
     assert t.set_constraint("no_bad", "bibcode NOT LIKE 'BAD%'") == 1
 
     def data_files():

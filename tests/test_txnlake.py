@@ -19,11 +19,18 @@ import traceback
 import pytest
 from pyspark.sql import functions as F
 
+from adsmasterpipeline_spark.sinks.lake import open_records
 from adsmasterpipeline_spark.sinks.txnlake import txn_table
 
 
 def _recs(spark, rows):
     return spark.createDataFrame(rows, "bibcode string, v long")
+
+
+def _stored(spark, ing):
+    """The records a streaming ingest left on disk."""
+    from adsmasterpipeline_spark.sinks.lake import open_records, read_records
+    return read_records(open_records(spark, ing.records_path))
 
 
 def _file_hashes(path):
@@ -43,7 +50,6 @@ def test_txn_merge_matches_full_rewrite(spark, tmp_path):
     upserts land, survivors persist, tombstones delete — through the
     same merge_updates-shaped inputs the lake sink interface takes."""
     from adsmasterpipeline_spark.schemas import EVENT_SCHEMA
-    from adsmasterpipeline_spark.sinks.lake import merge_records, write_records
     from adsmasterpipeline_spark.storage import empty_records, merge_updates
 
     now = F.lit(dt.datetime(2024, 1, 10)).cast("timestamp")
@@ -55,7 +61,7 @@ def test_txn_merge_matches_full_rewrite(spark, tmp_path):
     ], EVENT_SCHEMA)
     recs1, _ = merge_updates(empty_records(spark), ev1, now=now)
     path = str(tmp_path / "records")
-    write_records(recs1.localCheckpoint(), path, fmt="txn")
+    open_records(spark, path, "txn").overwrite(recs1.localCheckpoint())
 
     t = txn_table(spark, path)
     ev2 = spark.createDataFrame([
@@ -71,7 +77,7 @@ def test_txn_merge_matches_full_rewrite(spark, tmp_path):
     touched = recs2.join(ev2.select("bibcode").distinct(), "bibcode",
                          "left_semi").localCheckpoint()
     deleted = ev2.where("status = 'deleted'").select("bibcode").distinct()
-    merge_records(spark, touched, deleted, path, fmt="txn")
+    open_records(spark, path).merge(touched, deleted)
 
     got = sorted(tuple(r) for r in t.read().collect())
     want = sorted(tuple(r) for r in recs2.collect())
@@ -211,15 +217,15 @@ def test_streaming_ingest_on_txn_table(spark, tmp_path):
     ing_t = run("txn", "t")
     ing_p = run("parquet", "p")
 
-    t = ing_t._txn()
+    t = open_records(spark, ing_t.records_path)
     assert t.version() == 1          # one commit per micro-batch
     drop = {"created", "updated", "processed"}  # wall-clock stamps
-    cols = [c for c in ing_t._load_records().columns if c not in drop]
+    cols = [c for c in _stored(spark, ing_t).columns if c not in drop]
 
     def state(df):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
-    assert state(ing_t._load_records()) == state(ing_p._load_records())
+    assert state(_stored(spark, ing_t)) == state(_stored(spark, ing_p))
 
     # crash-replay: re-apply epoch 1's batch with the same epoch id —
     # the txn log already has ckpt#epoch-1, so nothing changes
@@ -405,14 +411,14 @@ def test_streaming_txn_delete_writes_tombstone(spark, tmp_path):
     ing_p = run("parquet", "p")
     # the deleted key is GONE from the txn table (no resurrection),
     # matching the parquet snapshot mode
-    assert {r["bibcode"] for r in ing_t._load_records().collect()} == {"S2"}
-    assert {r["bibcode"] for r in ing_p._load_records().collect()} == {"S2"}
+    assert {r["bibcode"] for r in _stored(spark, ing_t).collect()} == {"S2"}
+    assert {r["bibcode"] for r in _stored(spark, ing_p).collect()} == {"S2"}
     drop = {"created", "updated", "processed"}
-    cols = [c for c in ing_t._load_records().columns if c not in drop]
+    cols = [c for c in _stored(spark, ing_t).columns if c not in drop]
     assert (sorted(tuple(r) for r in
-                   ing_t._load_records().select(*cols).collect())
+                   _stored(spark, ing_t).select(*cols).collect())
             == sorted(tuple(r) for r in
-                      ing_p._load_records().select(*cols).collect()))
+                      _stored(spark, ing_p).select(*cols).collect()))
 
 
 @pytest.mark.slow
@@ -1102,13 +1108,13 @@ def test_streaming_txn_survives_delete_everything_epoch(spark, tmp_path):
                        "status": "deleted", "payload": None,
                        "event_ts": "2024-01-02T00:00:00.000Z"}])
     ing.run_available_now()
-    assert ing._load_records().count() == 0     # live-empty, no crash
+    assert _stored(spark, ing).count() == 0     # live-empty, no crash
     write("b3.json", [{"bibcode": "S2", "type": "bib_data",
                        "status": "active",
                        "payload": json.dumps({"bibcode": "S2"}),
                        "event_ts": "2024-01-03T00:00:00.000Z"}])
     ing.run_available_now()                     # would crash pre-fix
-    assert {r["bibcode"] for r in ing._load_records().collect()} == {"S2"}
+    assert {r["bibcode"] for r in _stored(spark, ing).collect()} == {"S2"}
 
 
 def test_txn_corrupt_checkpoint_falls_back_to_log(spark, tmp_path):
@@ -1177,12 +1183,12 @@ def test_streaming_auto_compact_bounds_file_count(spark, tmp_path):
             for i in range(5)))
         ing.run_available_now()
 
-    t = ing._txn()
+    t = open_records(spark, ing.records_path)
     # 9 epochs, compactions folded the per-epoch files: far fewer
     # live files than epochs
     assert len(t.live_files()) < 5
     assert any(h["operation"] == "compact" for h in t.history())
-    assert ing._load_records().count() == 45
+    assert _stored(spark, ing).count() == 45
 
 
 def _recs_ts(spark, rows):

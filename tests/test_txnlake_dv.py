@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from adsmasterpipeline_spark.sinks.txnlake import txn_table
 
-from test_txnlake import _file_hashes
+from test_txnlake import _file_hashes, _stored
 
 
 def _ids(spark, vals):
@@ -371,11 +371,11 @@ def test_dv_streaming_ingest_merge_on_read_parity(spark, tmp_path):
     ing_m = run("mor", True)
     ing_c = run("cow", False)
     drop = {"created", "updated", "processed"}
-    cols = [c for c in ing_m._load_records().columns if c not in drop]
+    cols = [c for c in _stored(spark, ing_m).columns if c not in drop]
     assert (sorted(tuple(r) for r in
-                   ing_m._load_records().select(*cols).collect())
+                   _stored(spark, ing_m).select(*cols).collect())
             == sorted(tuple(r) for r in
-                      ing_c._load_records().select(*cols).collect()))
+                      _stored(spark, ing_c).select(*cols).collect()))
     # the MoR mode's second epoch really went merge-on-read: the
     # update/tombstone epoch carries a DV entry, not a file rewrite
     from adsmasterpipeline_spark.sinks.txnlake import txn_table

@@ -147,7 +147,7 @@ def run_mode(spark, workdir: str, mode: str, rows: int, epochs: int,
         TxnTable._prune_candidates = orig_prune
         TxnTable.read = orig_read
         TxnTable.max_stat = orig_maxstat
-    t = ing._txn()
+    t = ing.table
     return {"bootstrap_secs": boot_secs,
             "final_version": t.version(),
             "final_live_files": len(t.live_files()),
