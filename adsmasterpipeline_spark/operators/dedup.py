@@ -218,7 +218,14 @@ def banded_hamming_pairs(sig: DataFrame, id_col: str, hash_col: str,
     band pigeonhole join (hamming <= 3 over 64 bits => some band
     equal), verified by exact bit_count hamming. Shared by the text
     SimHash and image Blockhash paths — one place for the banding
-    math."""
+    math.
+
+    Precondition: ``id_col`` is unique in ``sig``. Each pair is
+    emitted once, by its lowest agreeing band, with no dedup pass; an
+    id on several rows would emit each of its pairs once per pair of
+    rows.
+    Every caller hashes one row per document or asset, so the check
+    (a distinct count, one more job) is not made here."""
     # pin the signature table: both sides of the band self-join derive
     # from it, and for the multimodal callers the lineage above it is a
     # full media decode pass (mapInPandas — AQE does not reuse those

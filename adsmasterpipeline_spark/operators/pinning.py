@@ -62,3 +62,16 @@ def pin_if_bounded(df: DataFrame, sf_dir: str, *tables: str,
     if input_bytes(sf_dir, *tables) * factor <= PIN_BUDGET_BYTES:
         return df.localCheckpoint()
     return df
+
+
+def pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``(df.localCheckpoint(), row count)`` for the price of one job.
+
+    ``localCheckpoint()`` runs a job to materialize the pin and then a
+    ``count()`` on the pinned frame runs two more (a partial-count map
+    stage and the final reduce). Here the lazy pin is materialized by
+    a plain row count of its JVM RDD: one job that both fills the
+    pinned blocks and counts them. Shuffle stages upstream of the pin
+    run when it is planned, as for an eager pin."""
+    pinned = df.localCheckpoint(eager=False)
+    return pinned, pinned._jdf.rdd().count()

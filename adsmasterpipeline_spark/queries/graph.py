@@ -219,8 +219,8 @@ def _pagerank_sql(iters: int = 3) -> str:
       SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
       FROM edges GROUP BY src
     ),
-    r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_e6 FROM nodes),
-    {','.join(rounds)}
+    r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_e6 FROM nodes)
+    {''.join(',' + r for r in rounds)}
     SELECT CASE WHEN r.node % 2 = 0
                 THEN 's' || CAST(CAST(r.node / 2 AS BIGINT) AS VARCHAR)
                 ELSE 'c' || CAST(CAST((r.node - 1) / 2 AS BIGINT)
@@ -253,6 +253,8 @@ def _pagerank_sql(iters: int = 3) -> str:
 )
 def pagerank_supplier_customer(spark: SparkSession, sf_dir: str,
                                iters: int = 3) -> DataFrame:
+    if iters < 0:
+        raise ValueError(f"iters must be >= 0, got {iters}")
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                      "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey",
@@ -306,10 +308,15 @@ def pagerank_supplier_customer(spark: SparkSession, sf_dir: str,
     # every node, so round 1's adj-x-ranks join is an identity join of
     # the checkpointed adjacency with itself — compute the first
     # contribution straight from adj and skip that join outright
-    # (A/B at sf0.1: 1.51 s -> 1.37 s best-of-3, rows equal)
-    ranks = step(adj.select(
-        F.explode("dsts").alias("dst"),
-        idiv(F.lit(1000000).cast("long"), F.col("deg")).alias("c")))
+    # (A/B at sf0.1: 1.51 s -> 1.37 s best-of-3, rows equal). Zero
+    # rounds leave the constant initial ranks.
+    if iters == 0:
+        ranks = adj.select("node",
+                           F.lit(1000000).cast("long").alias("rank_e6"))
+    else:
+        ranks = step(adj.select(
+            F.explode("dsts").alias("dst"),
+            idiv(F.lit(1000000).cast("long"), F.col("deg")).alias("c")))
     for _ in range(iters - 1):
         ranks = step(adj.join(ranks, "node")
                      .select(F.explode("dsts").alias("dst"),

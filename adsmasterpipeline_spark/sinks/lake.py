@@ -87,28 +87,41 @@ def merge_events(table, events: DataFrame, now=None):
     of the upsert: read only the rows of the batch's keys
     (``read_for_keys``), continue insert ids from the table-wide max
     (a driver-side stat fold, a column scan only when a file lacks
-    the stat), then ``merge_updates``.
+    the stat), then build the ``storage.merge_plan``.
+
+    Everything downstream reads two pins: the events (counted in the
+    same job, which picks the insert numbering) and the merge plan.
+    So the event source is read once and the fold executes once,
+    however many times the merge, the changelog write and the
+    caller's counts consume the results.
 
     Returns ``(merged, changelog, deleted)``: ``merged`` holds the
-    post-merge rows of the batch's keys, pinned with
-    ``localCheckpoint``; ``deleted`` the batch keys that the events
-    removed, or None when the table has no rows yet (publish then
-    writes the whole table)."""
-    from ..storage import empty_records, merge_updates
-    keys = events.select(table.key).distinct()
+    post-merge rows of the batch's keys; ``changelog`` the batch's
+    changelog rows, stamped with the same ``now`` as ``merged``;
+    ``deleted`` the batch keys that the events removed, or None when
+    the table has no rows yet (publish then writes the whole table).
+    All three read the pinned plan."""
+    from ..operators.pinning import pin_counted
+    from ..storage import (SCALABLE_INSERT_THRESHOLD, changelog_rows,
+                           empty_records, merge_plan, merged_records)
+    events, n_events = pin_counted(events)
     exists = bool(table.live_files())
     if exists:
-        records = table.read_for_keys(keys)
+        records = table.read_for_keys(events.select(table.key))
         max_id = table.max_stat("id")
         if max_id is None:
             max_id = table.read().agg(F.max("id")).collect()[0][0] or 0
     else:
         records, max_id = empty_records(table.spark), 0
-    merged, changelog = merge_updates(records, events, now=now,
-                                      max_id=max_id)
-    merged = merged.localCheckpoint()
-    deleted = keys.join(merged, table.key, "left_anti") if exists else None
-    return merged, changelog, deleted
+    scalable = n_events > SCALABLE_INSERT_THRESHOLD
+    plan = merge_plan(records, events, now=now, max_id=max_id,
+                      scalable=scalable).localCheckpoint()
+    merged = merged_records(plan, max_id, scalable)
+    if scalable:
+        merged = merged.localCheckpoint()
+    deleted = (plan.where(F.col("_is_del")).select(table.key)
+               if exists else None)
+    return merged, changelog_rows(plan), deleted
 
 
 def publish(table, merged: DataFrame, deleted: DataFrame | None,
@@ -148,14 +161,15 @@ def write_metrics_sink(records_table, metrics: DataFrame, path: str,
     if not isinstance(records_table, TxnTable):
         metrics.write.mode("overwrite").parquet(path)
         return None
+    from ..operators.pinning import pin_counted
     from .writers import metrics_upsert
-    incoming = metrics_upsert(None, metrics).localCheckpoint()
+    incoming, n = pin_counted(metrics_upsert(None, metrics))
     mt = txn_table(records_table.spark, path, key="bibcode",
                    cluster_writes=True, rows_per_file=rows_per_file)
     if mt.live_files():
         mt.merge(incoming)
         return mt.last_merge_probe
-    if incoming.count():
+    if n:
         mt.overwrite(incoming)
     return None
 
@@ -187,12 +201,10 @@ class SnapshotTable:
         return self.spark.read.parquet(self.path)
 
     def read_for_keys(self, keys: DataFrame) -> DataFrame:
-        # pinned: the rows (and the changelog pre-images derived from
-        # them) must outlive the snapshot a merge swaps out
-        return (self.read()
-                .join(keys.select(self.key).distinct(), self.key,
-                      "left_semi")
-                .localCheckpoint())
+        # lazy: merge_events pins the merge plan built on these rows,
+        # so the pre-images outlive the snapshot a merge swaps out
+        return self.read().join(keys.select(self.key).distinct(),
+                                self.key, "left_semi")
 
     def read_for_range(self, col: str, lo=None, hi=None) -> DataFrame:
         df = self.read()

@@ -724,12 +724,18 @@ class TxnTable:
 
         The stats pass reads back ONLY this commit's files (O(batch),
         straight out of page cache) — the price of making every future
-        merge's probe O(candidate files) instead of O(table)."""
+        merge's probe O(candidate files) instead of O(table).
+
+        ``df`` executes once: a clustered write pins it while counting
+        it, an unclustered one only writes it."""
         rel_dir = os.path.join(
             "data", f"commit-{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
         if self.cluster_writes and self.key in df.columns:
-            n = df.count()
+            # pinned and counted in one job: the range sample and the
+            # write below read the pin instead of re-executing ``df``
+            from ..operators.pinning import pin_counted
+            df, n = pin_counted(df)
             nfiles = max(1, -(-n // self.rows_per_file))
             # on a partitioned table, range-cluster by (partition
             # cols, key): each task then holds a CONTIGUOUS run of
@@ -737,7 +743,9 @@ class TxnTable:
             # O(tasks + values) files instead of O(tasks x values)
             cluster = [c for c in self.partition_by
                        if c in df.columns] + [self.key]
-            df = df.repartitionByRange(nfiles, *cluster)
+            # one file needs no range bounds or shuffle
+            df = (df.coalesce(1) if nfiles == 1
+                  else df.repartitionByRange(nfiles, *cluster))
         if self.partition_by:
             missing = [c for c in self.partition_by
                        if c not in df.columns]
@@ -1226,10 +1234,10 @@ class TxnTable:
         if not snap.live:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
-        # pruning needs an agg + a collect and the result feeds a
-        # semi-join: sever the keys lineage once instead of
-        # re-executing the caller's pipeline three times
-        keys = keys.select(self.key).distinct().localCheckpoint()
+        # pruning collects the keys and the result feeds a semi-join:
+        # sever the keys lineage once instead of re-executing the
+        # caller's pipeline for each
+        keys, probe = self._pin_keys(keys.select(self.key))
         cands = self._prune_candidates(snap.live, keys)
         self.last_read_probe = {"live_files": len(snap.live),
                                 "candidate_files": sorted(cands)}
@@ -1237,7 +1245,7 @@ class TxnTable:
             # no file can contain any key: empty frame, table schema
             return self._empty_like(snap)
         return (self._read_live(cands, snap.dvs)
-                .join(keys, self.key, "left_semi"))
+                .join(probe, self.key, "left_semi"))
 
     def read(self, as_of: int | None = None) -> DataFrame:
         snap = self._snapshot(as_of)
@@ -1602,20 +1610,34 @@ class TxnTable:
         (<= prune_key_limit keys) test each file's range against the
         sorted key list (exact containment, strongest pruning); larger
         ones fall back to range overlap. Files without stats are
-        always candidates (never incorrectly skipped)."""
-        agg = affected.agg(
-            F.min(self.key).alias("mn"), F.max(self.key).alias("mx"),
-            F.count(F.lit(1)).alias("n")).collect()[0]
-        if agg["n"] == 0:
+        always candidates (never incorrectly skipped).
+
+        ``affected`` should be pinned: one bounded collect of at most
+        ``prune_key_limit + 1`` keys (one job, in one task) brings a
+        small batch's whole key set to the driver. Only when that
+        collect hits the bound does the min/max/count aggregate run,
+        over the distinct keys, exactly as for any large batch."""
+        got = (affected.coalesce(1).limit(self.prune_key_limit + 1)
+               .collect())
+        if not got:
             return []
-        bmin, bmax = agg["mn"], agg["mx"]
         keys = None
         digests = None
-        if agg["n"] <= self.prune_key_limit:
-            keys = sorted(r[0] for r in affected.collect()
-                          if r[0] is not None)
-            if keys and not _jsonable(keys[0]):
-                keys = None
+        if len(got) <= self.prune_key_limit:
+            vals = [r[0] for r in got if r[0] is not None]
+            bmin, bmax = (min(vals), max(vals)) if vals else (None, None)
+            keys = sorted(set(vals))
+        else:
+            affected = affected.distinct()
+            agg = affected.agg(
+                F.min(self.key).alias("mn"), F.max(self.key).alias("mx"),
+                F.count(F.lit(1)).alias("n")).collect()[0]
+            bmin, bmax = agg["mn"], agg["mx"]
+            if agg["n"] <= self.prune_key_limit:
+                keys = sorted(r[0] for r in affected.collect()
+                              if r[0] is not None)
+        if keys and not _jsonable(keys[0]):
+            keys = None
         out = []
         for p, s in live.items():
             if not s or s.get("min_key") is None or s.get("max_key") is None:
@@ -1677,6 +1699,45 @@ class TxnTable:
                 out.append(p)
         return out
 
+    def _pin_keys(self, keys: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """``(pinned, probe)``: ``keys`` pinned, and the pin as the
+        build side of a membership probe — hinted for broadcast when
+        it holds at most ``prune_key_limit`` rows, the bound under
+        which pruning brings the keys to the driver anyway. The hint
+        plans a broadcast up front instead of shuffling both sides
+        and re-planning; a larger key set is left to the planner.
+        Joins whose output partitioning becomes written files (the
+        survivors of a merge) use the unhinted pin, so an unclustered
+        write keeps the planner's layout."""
+        from ..operators.pinning import pin_counted
+        pinned, n = pin_counted(keys)
+        return pinned, (F.broadcast(pinned) if n <= self.prune_key_limit
+                        else pinned)
+
+    def _batch_keys(self, changed: DataFrame,
+                    deleted_keys: DataFrame | None
+                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """``(affected, probe, upserts)`` of a merge batch, all fed by
+        ONE pinned key set: every key of ``changed`` and of
+        ``deleted_keys``, each tagged deleted or not. ``probe`` is
+        ``affected`` as a probe's build side (see ``_pin_keys``). The
+        pruning collect, the touched-file probe and the survivor and
+        upsert joins all read that pin, so none of them re-executes
+        the caller's inputs. Keys are not de-duplicated: a repeated
+        key changes no semi or anti join, and pruning dedupes on the
+        driver. ``upserts`` is ``changed`` minus the deleted keys."""
+        key = self.key
+        tagged = changed.select(key, F.lit(False).alias("_deleted"))
+        if deleted_keys is not None:
+            tagged = tagged.unionByName(
+                deleted_keys.select(key, F.lit(True).alias("_deleted")))
+        tagged, probe = self._pin_keys(tagged)
+        affected, probe = tagged.select(key), probe.select(key)
+        if deleted_keys is None:
+            return affected, probe, changed
+        deleted = tagged.where(F.col("_deleted")).select(key)
+        return affected, probe, changed.join(deleted, key, "left_anti")
+
     def merge(self, changed: DataFrame,
               deleted_keys: DataFrame | None = None,
               app_txn_id: str | None = None, retries: int = 0,
@@ -1736,24 +1797,18 @@ class TxnTable:
         if app_txn_id is not None and app_txn_id in snap.txn_ids:
             return snap.version
         pmeta = self._reconcile_partitioning(snap)
-        if deleted_keys is None:
-            deleted_keys = changed.select(key).limit(0)
-        deleted_keys = deleted_keys.select(key).distinct()
-        affected = (changed.select(key)
-                    .unionByName(deleted_keys).distinct()
-                    .localCheckpoint())
+        affected, probe, upserts = self._batch_keys(changed, deleted_keys)
         candidates = self._prune_candidates(snap.live, affected)
         v = snap.version + 1
         matched = None
         if candidates:
             live_rows = self._live_rows_tagged(candidates, snap.dvs)
-            matched = (live_rows.join(affected, key, "left_semi")
+            matched = (live_rows.join(probe, key, "left_semi")
                        .select("_dv_file", "_dv_pos")
                        .localCheckpoint())
         # stage + validate the adds BEFORE writing the mask parquet:
         # a constraint refusal then leaves only the staged files
         # (which _validate_staged cleans up), never an orphan DV dir
-        upserts = changed.join(deleted_keys, key, "left_anti")
         if snap.live:
             # the copy-on-write path enforces the schema contract
             # through its survivors union (strict mode fails loudly on
@@ -1817,13 +1872,7 @@ class TxnTable:
         if app_txn_id is not None and app_txn_id in snap.txn_ids:
             return snap.version
         pmeta = self._reconcile_partitioning(snap)
-        if deleted_keys is None:
-            deleted_keys = changed.select(key).limit(0)
-        deleted_keys = deleted_keys.select(key).distinct()
-
-        affected = (changed.select(key)
-                    .unionByName(deleted_keys).distinct()
-                    .localCheckpoint())
+        affected, probe, upserts = self._batch_keys(changed, deleted_keys)
         candidates = self._prune_candidates(snap.live, affected)
         dv_cands = any(p in snap.dvs for p in candidates)
         if candidates and dv_cands:
@@ -1836,7 +1885,7 @@ class TxnTable:
             live_rows = self._live_rows_tagged(candidates, snap.dvs)
             touched = sorted(
                 r["_dv_file"] for r in
-                live_rows.join(affected, key, "left_semi")
+                live_rows.join(probe, key, "left_semi")
                 .select("_dv_file").distinct().collect())
         elif candidates:
             tagged = (self._read_files(candidates)
@@ -1845,7 +1894,7 @@ class TxnTable:
             # design — the same cardinality Delta's log fold holds on
             # the driver)
             touched_uris = [r["_file"] for r in
-                            tagged.join(affected, key, "left_semi")
+                            tagged.join(probe, key, "left_semi")
                             .select("_file").distinct().collect()]
             if any(not u for u in touched_uris):
                 # input_file_name() came back EMPTY: a caller has the
@@ -1867,12 +1916,12 @@ class TxnTable:
             "candidate_files": sorted(candidates),
             "touched_files": touched,
         }
-        upserts = changed.join(deleted_keys, key, "left_anti")
         if touched:
             # survivors read through the deletion vectors: a rewrite
             # MATERIALIZES the touched files' DVs (masked rows do not
             # survive into the new files), and the commit's removes
-            # drop their pointers
+            # drop their pointers. The join is the planner's (no
+            # broadcast hint): an unclustered write keeps its layout
             survivors = (self._read_live(touched, snap.dvs)
                          .join(affected, key, "left_anti"))
             # schema evolution: a widening batch unions by name with
@@ -1953,7 +2002,7 @@ class TxnTable:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
         if keys is not None:
-            keys = keys.select(key).distinct().localCheckpoint()
+            keys, probe = self._pin_keys(keys.select(key))
             candidates = self._prune_candidates(snap.live, keys)
         else:
             candidates = self._prune_where_candidates(snap, where)
@@ -1964,7 +2013,7 @@ class TxnTable:
             return snap.version
         live_rows = self._live_rows_tagged(candidates, snap.dvs)
         if keys is not None:
-            matched = live_rows.join(keys, key, "left_semi")
+            matched = live_rows.join(probe, key, "left_semi")
         else:
             cond = where if isinstance(where, Column) else F.expr(where)
             matched = live_rows.where(cond)

@@ -792,3 +792,98 @@ def test_cli_lake_replace_partition(spark, tmp_path, capsys):
                  "--expr", "src = 'arxiv'", "--from", bad]) == 1
     err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "error" in err
+
+
+def _tick_events(tmp_path, name, rows):
+    """An event directory from ``(bibcode, type, status, payload, day)``
+    rows."""
+    d = tmp_path / name
+    d.mkdir()
+    (d / "e.json").write_text("\n".join(json.dumps({
+        "bibcode": b, "type": t, "status": s,
+        "payload": json.dumps(p) if p is not None else None,
+        "event_ts": f"2024-02-{day:02d}T00:00:00.000Z"})
+        for b, t, s, p, day in rows))
+    return d
+
+
+def _bootstrap_rows(bibs, day=1):
+    rows = []
+    for b in bibs:
+        rows += [(b, "bib_data", "active", {"bibcode": b, "title": [b]}, day),
+                 (b, "orcid_claims", "active", {"verified": ["0-1"]}, day),
+                 (b, "nonbib_data", "active",
+                  {"boost": 0.1, "data_links_rows": [{"url": ["http://u"]}]},
+                  day),
+                 (b, "metrics", "active", {"citation_num": 1}, day)]
+    return rows
+
+
+# Spark jobs of one cron tick on the tiny table below. Job counts do
+# not depend on the host's speed, so they guard the tick's fixed cost
+# where wall time cannot. Lower them when a change removes jobs.
+TICK_INGEST_JOBS = 28
+TICK_REINDEX_JOBS = 44
+
+
+def test_cron_tick_job_budget(spark, tmp_path, capsys):
+    """A cron tick — ``ingest`` of a batch that updates, inserts and
+    deletes keys of a txn table, then ``reindex`` on the KV watermark —
+    stays within its Spark job budget."""
+    data = str(tmp_path / "data")
+    sc = spark.sparkContext
+
+    def jobs(step, *argv):
+        group = f"{tmp_path.name}-{step}"
+        sc.setJobGroup(group, step)
+        try:
+            assert main(list(argv)) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    boot = _tick_events(tmp_path, "boot", _bootstrap_rows(
+        [f"J{i:02d}" for i in range(12)]))
+    jobs("boot-ingest", "ingest", "--events", str(boot), "--data", data,
+         "--fmt", "txn", "--rows-per-file", "4")
+    jobs("boot-reindex", "reindex", "--data", data, "--rows-per-file", "4")
+    tick = _tick_events(tmp_path, "tick", [
+        ("J01", "bib_data", "active", {"bibcode": "J01", "title": ["J01b"]}, 2),
+        ("J07", "metrics", "active", {"citation_num": 2}, 2),
+        ("J05", "bib_data", "deleted", None, 2),
+    ] + _bootstrap_rows(["J20"], day=2))
+    n_ingest, ing = jobs("tick-ingest", "ingest", "--events", str(tick),
+                         "--data", data, "--rows-per-file", "4")
+    n_reindex, rei = jobs("tick-reindex", "reindex", "--data", data,
+                          "--rows-per-file", "4")
+    # the tick did its work: three live keys merged, one deleted
+    assert ing["records"] == 3 and ing["probe"]["touched_files"] >= 1
+    assert (rei["solr"], rei["metrics"], rei["links"]) == (2, 2, 1)
+    assert n_ingest <= TICK_INGEST_JOBS, n_ingest
+    assert n_reindex <= TICK_REINDEX_JOBS, n_reindex
+
+
+def test_ingest_changelog_stamp_matches_record(spark, tmp_path, capsys):
+    """One ingest stamps one time: the changelog rows it appends carry
+    the same ``created`` as the ``updated`` of the records it wrote."""
+    import os
+
+    from adsmasterpipeline_spark.sinks.lake import open_records, read_records
+    data = str(tmp_path / "data")
+    boot = _tick_events(tmp_path, "boot", _bootstrap_rows(["S1", "S2"]))
+    assert main(["ingest", "--events", str(boot), "--data", data,
+                 "--fmt", "txn"]) == 0
+    tick = _tick_events(tmp_path, "tick", [
+        ("S1", "bib_data", "active", {"bibcode": "S1", "title": ["S1b"]}, 2)])
+    assert main(["ingest", "--events", str(tick), "--data", data]) == 0
+    capsys.readouterr()
+    updated = {r["bibcode"]: r["updated"] for r in read_records(
+        open_records(spark, os.path.join(data, "records"))).collect()}
+    log = spark.read.parquet(os.path.join(data, "changelog"))
+    stamps = {(r["key"], r["created"]) for r in
+              log.where("type = 'bib_data'").collect()}
+    # each ingest's bib_data entry is stamped with its own record time
+    assert ("S2", updated["S2"]) in stamps
+    assert ("S1", updated["S1"]) in stamps
+    assert updated["S1"] > updated["S2"]

@@ -121,3 +121,37 @@ def test_triangle_copurchase_hand_computed(spark, tmp_path):
     out = {r["part_key"]: r["tri_count"]
            for r in triangle_copurchase(spark, sf).collect()}
     assert out == {1: 1, 2: 1, 3: 1}
+
+
+def test_pagerank_zero_iterations_is_constant(spark, tmp_path):
+    """iters=0 returns the constant initial ranks (the first round is
+    unrolled, so it must not run), equal to the DuckDB oracle's r0,
+    and iters=1 still equals its oracle; a negative count is refused."""
+    import duckdb
+    import pytest
+
+    from adsmasterpipeline_spark.queries.graph import (
+        _pagerank_sql, pagerank_supplier_customer)
+
+    sf = str(tmp_path / "pr")
+    spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 10), (3, 12)],
+        "l_orderkey long, l_suppkey long").coalesce(1) \
+        .write.parquet(sf + "/lineitem.parquet")
+    spark.createDataFrame(
+        [(1, 100), (2, 101), (3, 100)],
+        "o_orderkey long, o_custkey long").coalesce(1) \
+        .write.parquet(sf + "/orders.parquet")
+    con = duckdb.connect()
+    for t in ("lineitem", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf}/{t}.parquet/*.parquet')")
+    for iters in (0, 1):
+        got = sorted(tuple(r) for r in
+                     pagerank_supplier_customer(spark, sf, iters).collect())
+        want = sorted(con.execute(_pagerank_sql(iters)).fetchall())
+        assert got == want, iters
+    ranks = {r[2] for r in pagerank_supplier_customer(spark, sf, 0).collect()}
+    assert ranks == {1_000_000}
+    with pytest.raises(ValueError):
+        pagerank_supplier_customer(spark, sf, -1)

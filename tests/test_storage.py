@@ -231,3 +231,54 @@ def test_kv_watermark(spark, tmp_path):
     kv.put("last.reindex.normal", "2024-03-01T00:00:00")
     assert kv.get("last.reindex.normal") == "2024-03-01T00:00:00"
     assert kv.get("last.reindex.forced") == "2024-02-01T00:00:00"
+
+
+def test_kv_store_without_spark(spark, tmp_path):
+    """The KV reads and writes its parquet on the driver (no Spark
+    job), keeps the format Spark reads, publishes by rename, and only
+    a missing directory reads as empty."""
+    sc = spark.sparkContext
+    sc.setJobGroup("kv-store", "kv get/put")
+    try:
+        kv = KeyValueStore(spark, str(tmp_path / "kv"))
+        assert kv.get("last.reindex.normal") is None
+        kv.put("last.reindex.normal", "2024-01-01T00:00:00")
+        kv.put("last.reindex.forced", "2024-02-01T00:00:00")
+        assert kv.get("last.reindex.normal") == "2024-01-01T00:00:00"
+        assert sc.statusTracker().getJobIdsForGroup("kv-store") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # one data file, no temp file left behind; Spark reads the same table
+    assert sorted(p.name for p in (tmp_path / "kv").iterdir()) \
+        == ["part-00000.parquet"]
+    rows = {r["key"]: r["value"]
+            for r in spark.read.parquet(str(tmp_path / "kv")).collect()}
+    assert rows == {"last.reindex.normal": "2024-01-01T00:00:00",
+                    "last.reindex.forced": "2024-02-01T00:00:00"}
+
+    # a put that crashed before its rename left only a hidden temp file
+    (tmp_path / "kv" / ".put-crashed.parquet").write_bytes(b"partial")
+    assert kv.get("last.reindex.forced") == "2024-02-01T00:00:00"
+
+    # a KV written by Spark (part-* names) is read, then superseded
+    old = tmp_path / "spark_kv"
+    spark.createDataFrame([("a", "1"), ("b", "2")], "key string, value string") \
+        .coalesce(1).write.parquet(str(old))
+    kv2 = KeyValueStore(spark, str(old))
+    assert kv2.get("b") == "2"
+    kv2.put("a", "3")
+    assert [p.name for p in old.iterdir() if p.name.startswith("part-")] \
+        == ["part-00000.parquet"]
+    assert (kv2.get("a"), kv2.get("b")) == ("3", "2")
+
+
+def test_kv_corrupt_raises(spark, tmp_path):
+    """An unreadable KV must raise: read as empty, the missing
+    watermark would turn the next reindex into a full rescan."""
+    kv = KeyValueStore(spark, str(tmp_path / "kv"))
+    kv.put("last.reindex.normal", "2024-01-01T00:00:00")
+    (tmp_path / "kv" / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        kv.get("last.reindex.normal")
+    with pytest.raises(Exception):
+        kv.put("last.reindex.normal", "2024-03-01T00:00:00")
